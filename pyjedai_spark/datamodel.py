@@ -1,9 +1,8 @@
-"""Data model: entity-profile normalization and the webtext input table.
+"""Data model: entity-profile normalization and webtext html extraction.
 
 Reference Data ctor (src/pyjedai/datamodel.py:77-186): every attribute
-cell NaN->"" then str; ids remapped to contiguous 0..n-1. Spark
-equivalents here: coalesce+cast projection and a deterministic
-row_number id assignment over the natural key.
+cell NaN->"" then str. Spark equivalent here: a coalesce+cast
+projection.
 
 Webtext input (BASELINE.json input_hint): Iceberg-style table
 (url string, warc_ts timestamp, html binary, text string, lang string).
@@ -19,7 +18,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
@@ -55,37 +54,6 @@ def normalize_profiles(df: DataFrame, id_col: str,
         F.col(id_col),
         *[F.coalesce(F.col(c).cast("string"), F.lit("")).alias(c) for c in attrs],
     )
-
-
-def assign_entity_ids(df: DataFrame, natural_key: str,
-                      id_name: str = "eid") -> DataFrame:
-    """Contiguous deterministic ids 0..n-1 ordered by the natural key
-    (reference contiguous-id contract, datamodel.py:115,221-248;
-    monotonically_increasing_id is non-contiguous so row_number-1 over
-    a deterministic sort is used — one global sort at load time).
-
-    At 10^12-row scale prefer keeping the natural key (url) as the join
-    key; contiguous ids are only needed for parity with reference id
-    semantics and for compact signatures.
-    """
-    w = Window.orderBy(F.col(natural_key))
-    return df.withColumn(id_name, (F.row_number().over(w) - 1).cast("long"))
-
-
-def load_webtext(spark, path: str) -> DataFrame:
-    """Read the (url, warc_ts, html, text, lang) table and ensure
-    extracted text is present: rows with NULL text get UDF-extracted
-    text from html."""
-    df = spark.read.parquet(path)
-    if "text" in df.columns:
-        df = df.withColumn(
-            "text",
-            F.when(F.col("text").isNull(), extract_text_udf(F.col("html")))
-            .otherwise(F.col("text")),
-        )
-    else:
-        df = df.withColumn("text", extract_text_udf(F.col("html")))
-    return df
 
 
 def load_documents(spark, sf_dir: str) -> DataFrame:

@@ -232,11 +232,6 @@ def token_hash_u32(tok: Column) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long")
 
 
-def token_hashes(tokens_col) -> Column:
-    """array<string> -> array<long> of 32-bit hashes."""
-    return F.transform(_col(tokens_col), token_hash_u32)
-
-
 def word_shingles(tokens_col, w: int, join_sep: str = " ") -> Column:
     """w-token rolling shingles (non-distinct order preserved) from a
     *non-distinct* token array — the unit for substring/long-span dedup."""

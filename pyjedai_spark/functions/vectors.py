@@ -420,15 +420,3 @@ def _resolve_encoder(spec):
         return lambda texts: model.encode(texts)
     raise ValueError(f"unknown encoder spec {spec!r} "
                      "(expected a callable or 'sentence-transformers:<name>')")
-
-
-def sign_lsh_bucket(vec_col, dims: list[int] | None = None):
-    """Single-band coordinate-sign bucket (the round-1 family) — kept
-    for tests/back-compat; superseded by ``band_bucket_exprs`` (more
-    bits + banding) as the default scale path."""
-    dims = dims or list(range(8))
-    expr = F.lit(0)
-    for i, d in enumerate(dims):
-        expr = expr + F.when(F.element_at(vec_col, d + 1) > 0,
-                             F.lit(1 << i)).otherwise(F.lit(0))
-    return expr

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from .dedup import _make_inter_udf
 
 
 def _join_tokens(col, tokenization: str, qgrams: int):
@@ -65,30 +66,6 @@ def _multiset(toks) -> "F.Column":
         ),
         lambda acc: acc["out"],
     )
-
-
-def _intersect_count(id1, t1, id2, t2, impl: str | None = None):
-    """Common-token count |set(t1) ∩ set(t2)| for the verify joins.
-
-    ``impl="arrow"`` (default, same ``PYJEDAI_VERIFY_IMPL`` switch as
-    :func:`..dedup.jaccard_verify`) computes it in the vectorized
-    pandas_udf kernel — the ``array_intersect`` expression allocates a
-    per-row hash set on the shared executor heap, the allocation class
-    the round-5 scaling forensics measured at 2.2–2.4× on 4× cores;
-    ``impl="expr"`` keeps the pure-column form. Join tokenizations are
-    distinct-by-construction (sets, or occurrence-suffixed multisets)
-    and ``array_intersect`` dedups its output, so both impls return the
-    same count; the similarity arithmetic consuming it stays JVM-side
-    (integral ``/`` promotes to double either way) — bit-identical
-    output, pinned by test_ejoin_arrow_expr_identical."""
-    import os as _os
-
-    impl = impl or _os.environ.get("PYJEDAI_VERIFY_IMPL", "arrow")
-    if impl == "arrow":
-        from .dedup import _make_inter_udf
-
-        return _make_inter_udf()(id1, t1, id2, t2)
-    return F.size(F.array_intersect(t1, t2))
 
 
 def _sim_expr(metric: str, c, f1, f2):
@@ -246,7 +223,7 @@ def ejoin(docs: DataFrame, similarity_threshold: float = 0.82,
                             F.col("toks").alias("_t1")), "id1")
         .join(tv.select(F.col("eid").alias("id2"),
                         F.col("toks").alias("_t2")), "id2")
-        .withColumn("c", _intersect_count("id1", "_t1", "id2", "_t2"))
+        .withColumn("c", _make_inter_udf()("id1", "_t1", "id2", "_t2"))
         .withColumn("f1", F.size("_t1")).withColumn("f2", F.size("_t2"))
     )
     sim = _sim_expr(metric, F.col("c"), F.col("f1"), F.col("f2")).cast("double")
@@ -365,7 +342,7 @@ def pe_topk_join(docs: DataFrame, k: int, metric: str = "cosine",
                                   F.col("toks").alias("_ta")), "eid")
             .join(toks.select(F.col("eid").alias("neighbor"),
                               F.col("toks").alias("_tb")), "neighbor")
-            .withColumn("c", _intersect_count("eid", "_ta", "neighbor", "_tb"))
+            .withColumn("c", _make_inter_udf()("eid", "_ta", "neighbor", "_tb"))
             .withColumn("sim", _sim_expr(metric, F.col("c"),
                                          F.size("_ta"), F.size("_tb"))
                         .cast("double"))

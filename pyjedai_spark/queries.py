@@ -4631,13 +4631,13 @@ ORACLES = _build_oracles()
 # across rounds; long-green unchanged queries move to the tail.
 _DRIVER_PRIORITY = [
     # behavior-touched in round 6 — every end-to-end consumer of the
-    # new Arrow verify kernel (jaccard_verify impl swap) plus the
+    # Arrow verify kernel that jaccard_verify runs, plus the
     # rdf_subject_er two-pass lid rank; streaming_reconciled exercises
     # the kernel inside foreachBatch, the riskiest execution context.
-    # simhash_signatures joined late-round when its impl swapped to
-    # the Arrow SimHash kernel (simhash_pairs, its end-to-end
-    # consumer, is already below); video_frame_sample (rows-only, no
-    # oracle to compare) ceded the slot to keep the list at 50.
+    # simhash_signatures joined late-round when it moved onto the
+    # Arrow SimHash kernel (simhash_pairs, its end-to-end consumer, is
+    # already below); video_frame_sample (rows-only, no oracle to
+    # compare) ceded the slot to keep the list at 50.
     "rdf_subject_er", "corpus_clean_tiered", "streaming_reconciled",
     "webtext_minhash_clusters", "tiered_near_dup", "corpus_clean",
     "simhash_signatures",

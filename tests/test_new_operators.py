@@ -8,6 +8,7 @@ import re
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
+import kernel_reference as KR
 
 from pyjedai_spark.functions import text as T
 from pyjedai_spark.operators import block_building as BB
@@ -612,6 +613,18 @@ def test_corpus_clean_tiered_all_tied_equals_default(spark):
     assert tiered == default
 
 
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _with_reference_intersect(monkeypatch, module, build):
+    """Run ``build()`` with ``module``'s verify kernel swapped for the
+    ``size(array_intersect)`` reference form."""
+    with monkeypatch.context() as m:
+        m.setattr(module, "_make_inter_udf", lambda: KR.intersect_count)
+        return build()
+
+
 def test_minhash_arrow_expr_bit_identical(spark, docs):
     """The vectorized Arrow signature kernel (r5 scaling fix) must be
     bit-identical to the expression fold on both token and shingle
@@ -620,9 +633,9 @@ def test_minhash_arrow_expr_bit_identical(spark, docs):
     from pyjedai_spark.operators import dedup as DD
 
     for shingle in (1, 3):
-        e = DD.minhash_signatures(docs, shingle_size=shingle, impl="expr") \
+        e = KR.minhash_signatures(docs, shingle_size=shingle) \
             .withColumnRenamed("sig", "sig_e")
-        a = DD.minhash_signatures(docs, shingle_size=shingle, impl="arrow") \
+        a = DD.minhash_signatures(docs, shingle_size=shingle) \
             .withColumnRenamed("sig", "sig_a")
         j = e.join(a, "eid")
         assert j.count() == docs.count()
@@ -630,26 +643,26 @@ def test_minhash_arrow_expr_bit_identical(spark, docs):
 
 
 def test_minhash_arrow_null_text_matches_expr(spark):
-    """NULL-text docs must get a NULL signature in BOTH impls (the
-    expression fold and the DuckDB oracles propagate NULL; the arrow
-    kernel used to emit the [P]*k empty-doc sentinel instead — r5
-    ADVICE medium)."""
+    """NULL-text docs must get a NULL signature from the kernel, as
+    from the expression fold and the DuckDB oracles (the arrow kernel
+    used to emit the [P]*k empty-doc sentinel instead — r5 ADVICE
+    medium)."""
     from pyjedai_spark.operators import dedup as DD
 
     df = spark.createDataFrame([(1, None), (2, ""), (3, "real text")],
                                "doc_id long, text string")
     for shingle in (1, 3):
-        e = {r["eid"]: r["sig"] for r in DD.minhash_signatures(
-            df, shingle_size=shingle, impl="expr").collect()}
+        e = {r["eid"]: r["sig"] for r in KR.minhash_signatures(
+            df, shingle_size=shingle).collect()}
         a = {r["eid"]: r["sig"] for r in DD.minhash_signatures(
-            df, shingle_size=shingle, impl="arrow").collect()}
+            df, shingle_size=shingle).collect()}
         assert e == a
         assert a[1] is None
 
 
-def test_jaccard_verify_arrow_expr_identical(spark, docs):
+def test_jaccard_verify_arrow_expr_identical(spark, docs, monkeypatch):
     """The vectorized verify kernel (r6 scaling fix) must be
-    bit-identical to the array_intersect expression path — the DuckDB
+    bit-identical to the array_intersect expression form — the DuckDB
     near-dup oracles reproduce the expression arithmetic. Covers both
     the shingle (production) and unit-token paths, plus NULL text."""
     from pyjedai_spark.operators import dedup as DD
@@ -658,10 +671,9 @@ def test_jaccard_verify_arrow_expr_identical(spark, docs):
     for shingle in (1, 3):
         cands = DD.lsh_candidate_pairs(sample, k=32, bands=8,
                                        shingle_size=shingle, max_bucket=None)
-        e = sorted(map(tuple, DD.jaccard_verify(
-            cands, sample, 0.2, shingle, impl="expr").collect()))
-        a = sorted(map(tuple, DD.jaccard_verify(
-            cands, sample, 0.2, shingle, impl="arrow").collect()))
+        a = _sorted_rows(DD.jaccard_verify(cands, sample, 0.2, shingle))
+        e = _with_reference_intersect(monkeypatch, DD, lambda: _sorted_rows(
+            DD.jaccard_verify(cands, sample, 0.2, shingle)))
         assert e == a and len(e) > 0
 
     nulls = spark.createDataFrame(
@@ -669,10 +681,9 @@ def test_jaccard_verify_arrow_expr_identical(spark, docs):
         "doc_id long, text string")
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (3, 4)], "id1 long, id2 long")
-    e = sorted(map(tuple, DD.jaccard_verify(
-        pairs, nulls, 0.1, 1, impl="expr").collect()))
-    a = sorted(map(tuple, DD.jaccard_verify(
-        pairs, nulls, 0.1, 1, impl="arrow").collect()))
+    a = _sorted_rows(DD.jaccard_verify(pairs, nulls, 0.1, 1))
+    e = _with_reference_intersect(monkeypatch, DD, lambda: _sorted_rows(
+        DD.jaccard_verify(pairs, nulls, 0.1, 1)))
     assert e == a == [(1, 2, 1.0)]
 
 
@@ -684,7 +695,7 @@ def test_minhash_arrow_empty_doc_sentinel(spark):
     df = spark.createDataFrame([(1, ""), (2, "   "), (3, "real text")],
                                "doc_id long, text string")
     rows = {r["eid"]: r["sig"]
-            for r in DD.minhash_signatures(df, impl="arrow").collect()}
+            for r in DD.minhash_signatures(df).collect()}
     assert rows[1] == [DD.P] * 32 and rows[2] == [DD.P] * 32
     assert rows[3] != [DD.P] * 32
 
@@ -733,12 +744,12 @@ def test_pe_topk_brute_force_parity(spark, docs):
     assert out == brute and len(out) > 0
 
 
-def test_simhash_arrow_expr_identical(spark, docs):
+def test_simhash_arrow_expr_identical(spark, docs, monkeypatch):
     """The vectorized SimHash kernel (r6: one scan, zero shuffle) must
-    be bit-identical to the 32-conditional-sum aggregate path — the
+    be bit-identical to the 32-conditional-sum aggregate form — the
     DuckDB simhash oracles reproduce the aggregate arithmetic. NULL and
     empty-token docs must be ABSENT from both (explode/unnest drops
-    them; the kernel path filters its NULL signatures)."""
+    them; the kernel path filters them out before the UDF)."""
     from pyjedai_spark.operators import dedup as DD
 
     extra = spark.createDataFrame(
@@ -746,20 +757,17 @@ def test_simhash_arrow_expr_identical(spark, docs):
         "doc_id long, text string")
     df = docs.select("doc_id", "text").unionByName(extra)
     e = {r["eid"]: r["simhash"]
-         for r in DD.simhash_signatures(df, impl="expr").collect()}
+         for r in KR.simhash_signatures(df).collect()}
     a = {r["eid"]: r["simhash"]
-         for r in DD.simhash_signatures(df, impl="arrow").collect()}
+         for r in DD.simhash_signatures(df).collect()}
     assert e == a and len(e) > 0
     assert 9001 not in a and 9002 not in a and 9003 not in a
     assert 9004 in a
 
-    pe = sorted(map(tuple, DD.simhash_candidate_pairs(df).collect()))
-    import os
-    os.environ["PYJEDAI_SIMHASH_IMPL"] = "expr"
-    try:
-        pa = sorted(map(tuple, DD.simhash_candidate_pairs(df).collect()))
-    finally:
-        del os.environ["PYJEDAI_SIMHASH_IMPL"]
+    pa = _sorted_rows(DD.simhash_candidate_pairs(df))
+    with monkeypatch.context() as m:
+        m.setattr(DD, "simhash_signatures", KR.simhash_signatures)
+        pe = _sorted_rows(DD.simhash_candidate_pairs(df))
     assert pe == pa
 
 
@@ -772,16 +780,43 @@ def test_ejoin_arrow_expr_identical(spark, docs, monkeypatch):
     from pyjedai_spark.operators import joins as J
 
     sample = docs.limit(150)
-    for impl_env, bag in (("expr", {}), ("arrow", {})):
-        monkeypatch.setenv("PYJEDAI_VERIFY_IMPL", impl_env)
-        bag["ej"] = sorted(map(tuple, J.ejoin(
-            sample, 0.6, "cosine", "qgrams").collect()))
-        bag["ejm"] = sorted(map(tuple, J.ejoin(
-            sample, 0.5, "dice", "standard_multiset").collect()))
-        bag["pk"] = sorted(map(tuple, J.pe_topk_join(
-            sample.limit(60), 3, "jaccard", "standard").collect()))
-        if impl_env == "expr":
-            expr_bag = dict(bag)
+
+    def outputs():
+        return {
+            "ej": _sorted_rows(J.ejoin(sample, 0.6, "cosine", "qgrams")),
+            "ejm": _sorted_rows(J.ejoin(
+                sample, 0.5, "dice", "standard_multiset")),
+            "pk": _sorted_rows(J.pe_topk_join(
+                sample.limit(60), 3, "jaccard", "standard")),
+        }
+
+    bag = outputs()
+    expr_bag = _with_reference_intersect(monkeypatch, J, outputs)
     assert expr_bag["ej"] == bag["ej"] and len(bag["ej"]) > 0
     assert expr_bag["ejm"] == bag["ejm"] and len(bag["ejm"]) > 0
     assert expr_bag["pk"] == bag["pk"] and len(bag["pk"]) > 0
+
+
+def _arrow_eval_nodes(df) -> int:
+    """ArrowEvalPython nodes in the plan ``df`` ran with (the final
+    adaptive plan, not its initial plan as well)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString().count("ArrowEvalPython")
+
+
+def test_verify_kernel_evaluated_once(spark, docs):
+    """A threshold filter on the verify kernel's output must not copy
+    the UDF into a second ArrowEvalPython node: every surviving pair
+    would run the Python intersect twice (r06 plans, nodes (12)/(15)
+    and (18)/(21))."""
+    from pyjedai_spark.operators import dedup as DD
+    from pyjedai_spark.operators import joins as J
+
+    sample = docs.limit(120)
+    cands = DD.lsh_candidate_pairs(sample, k=32, bands=8, max_bucket=None)
+    assert _arrow_eval_nodes(DD.jaccard_verify(cands, sample, 0.2)) == 1
+    assert _arrow_eval_nodes(J.ejoin(
+        sample, 0.6, "cosine", "standard", prefix_filter=True)) == 1
